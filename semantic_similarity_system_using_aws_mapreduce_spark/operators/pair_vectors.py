@@ -4,25 +4,52 @@ Three reference mechanisms collapse into declarative relational ops:
 
   * J3: the gold standard, loaded into every mapper's memory and probed
     with containsKey + fan-out loop (Step4.java:84-165), becomes a
-    broadcast inner join against the two-orientation expansion of the
-    gold pairs.
+    broadcast semi-join of assoc against the gold words: only gold
+    words' rows survive the scan.  Each surviving word's rows are then
+    grouped into ONE ``map<feature, struct<freq, prob, pmi, ttest>>``
+    (partial ``collect_list`` before the shuffle, ``map_from_entries``
+    after it).  ``map_from_entries`` needs ``(lexeme, feature)`` to be
+    unique in assoc, which Step1's ``groupBy`` guarantees.
   * J4: the CompositeKey secondary sort + grouping comparator + stream
     pairing of feature-sorted values (Step4.java:20-68, :196-247,
     :378-409) is exactly a zero-filled full-outer alignment of the two
-    words' sparse feature vectors.  We express it as ONE grouped
-    aggregation: group by (pair, feature), pick each side's values with
-    conditional max, coalesce the missing side to 0 — strictly fewer
-    shuffles than a self-join of two filtered branches.
+    words' sparse feature vectors.  Both words' maps are left-joined
+    onto each distinct gold pair (a pair with neither word in assoc
+    drops out, as the reference emits nothing for it), and
+    ``map_zip_with`` over the two maps, with 0 for a missing side,
+    followed by ``explode`` yields the aligned per-feature rows.
   * A5/D1-D6: the reducer's 24 running accumulators (Step4.java:181-186,
     :327-363) are 4 x 6 built-in aggregate expressions (similarity.py).
 
-Scale notes (100 TB): assoc is huge; gold is tiny (~15k pairs).  The
-broadcast join filters assoc down to gold lexemes *before* any shuffle
-(the reference's semi-join-in-mapper optimization, Step4.java:142, is
-what a broadcast hash join does for free).  The two groupBys that
-follow both partition by (word1, word2, ...) prefixes, so Catalyst
-reuses one exchange for both aggregations.  Fan-out is bounded by gold
-pair multiplicity per lexeme (small constant).
+Scale notes (100 TB): assoc is huge; gold is tiny (~15k pairs).  A
+gold word's features cross the network once, as one map, however many
+gold pairs it is in; the per-(pair, feature) rows are made after the
+joins and are summed per pair before any shuffle.
+
+  * The gold relation is read once: the word list is exploded from the
+    distinct pairs, so the stem UDF runs in one stage and the pairs'
+    exchange is reused.  Both sides join the same ``vecs`` relation,
+    so its exchange is reused too.
+  * The maps are broadcast when Spark's size estimate for them is under
+    ``spark.sql.autoBroadcastJoinThreshold`` (64m in ``get_spark``).
+    Without column statistics that estimate is about assoc's own: the
+    semi-join keeps the left side's estimate and the grouping only
+    rescales it by row width, so it does not see that few words are
+    gold words.  Where the estimate is too high, AQE can still turn the
+    joins into broadcasts at run time, once the materialized maps are
+    under ``spark.sql.adaptive.autoBroadcastJoinThreshold``.  On the
+    job-flow benchmark's inputs the maps broadcast at plan time both
+    over the assoc checkpoint and with assoc computed in the same plan
+    (EXPLAIN dumps under ``plans/``).  With the maps broadcast, the only shuffles are the
+    gold pairs' ``distinct`` and the maps' ``collect_list``; the pairs
+    stay hash-partitioned by their keys, so the per-pair aggregation
+    adds none.
+  * Maps too large to broadcast: the left joins sort-merge.  The pairs
+    are shuffled by ``word1``; then each pair, with ``word1``'s map
+    attached, is shuffled by ``word2``, so ``word1``'s map crosses the
+    network once per gold pair it is in.  The maps' own exchange (by
+    lexeme) serves both joins, and the per-pair aggregation runs on the
+    ``word2`` partitioning without a further shuffle.
 """
 
 from __future__ import annotations
@@ -41,56 +68,38 @@ _ASSOC_COLS = {
 }
 
 
-def expand_gold_pairs(gold: DataFrame) -> DataFrame:
-    """Two-orientation expansion of gold pairs, keyed by the word that
-    will probe the assoc relation (reference Step4.java:113-114 inserts
-    both orientations; the HashSet dedups -> distinct here)."""
-    w1, w2 = F.col("word1"), F.col("word2")
-    first = gold.select(
-        w1.alias("lexeme"), w2.alias("other"), F.lit(True).alias("is_w1"), "related"
-    )
-    second = gold.select(
-        w2.alias("lexeme"), w1.alias("other"), F.lit(False).alias("is_w1"), "related"
-    )
-    return first.unionByName(second).distinct()
-
-
 def pair_feature_matrix(assoc: DataFrame, gold: DataFrame) -> DataFrame:
     """Zero-filled feature alignment (J3 + J4): one row per
-    (word1, word2, related, feature) with both words' four association
-    values, missing side filled with 0 (the reference's ZEROS rows,
-    Step4.java:179, :230-247)."""
-    matched = assoc.join(F.broadcast(expand_gold_pairs(gold)), "lexeme")
-    tagged = matched.select(
-        F.when(F.col("is_w1"), F.col("lexeme")).otherwise(F.col("other")).alias("word1"),
-        F.when(F.col("is_w1"), F.col("other")).otherwise(F.col("lexeme")).alias("word2"),
-        F.col("related").alias("is_related"),
-        "feature",
-        "is_w1",
-        *_ASSOC_COLS.values(),
+    (word1, word2, is_related, feature) with both words' four
+    association values, the missing side filled with 0 (the reference's
+    ZEROS rows, Step4.java:179, :230-247).  A pair neither of whose
+    words occurs in ``assoc`` has no rows."""
+    pairs = gold.select("word1", "word2", F.col("related").alias("is_related")).distinct()
+    words = pairs.select(F.explode(F.array("word1", "word2")).alias("lexeme"))
+    values = F.struct(*[F.col(col).alias(short) for short, col in _ASSOC_COLS.items()])
+    vecs = (
+        assoc.join(F.broadcast(words), "lexeme", "left_semi")
+        .groupBy("lexeme")
+        .agg(F.map_from_entries(F.collect_list(F.struct("feature", values))).alias("vec"))
     )
-    aggs = []
-    for short, col in _ASSOC_COLS.items():
-        aggs.append(
-            F.coalesce(
-                F.max(F.when(F.col("is_w1"), F.col(col))), F.lit(0.0)
-            ).alias(f"x_{short}")
-        )
-        aggs.append(
-            F.coalesce(
-                F.max(F.when(~F.col("is_w1"), F.col(col))), F.lit(0.0)
-            ).alias(f"y_{short}")
-        )
-    # Repartition on the PAIR keys (not pair+feature): hash-clustering
-    # by (word1, word2, is_related) satisfies both this aggregation's
-    # and the downstream per-pair aggregation's distribution, so the
-    # whole align-then-measure stage runs in ONE shuffle (measured ~30%
-    # faster end-to-end than letting each groupBy exchange separately).
-    return (
-        tagged.repartition("word1", "word2", "is_related")
-        .groupBy("word1", "word2", "is_related", "feature")
-        .agg(*aggs)
+    joined = (
+        pairs.join(vecs.toDF("word1", "x"), "word1", "left")
+        .join(vecs.toDF("word2", "y"), "word2", "left")
+        .filter(F.col("x").isNotNull() | F.col("y").isNotNull())
     )
+    empty = F.create_map().cast(vecs.schema["vec"].dataType)
+
+    def zero_filled(_, xv, yv):
+        cols = []
+        for short in _ASSOC_COLS:
+            cols.append(F.coalesce(xv[short], F.lit(0.0)).alias(f"x_{short}"))
+            cols.append(F.coalesce(yv[short], F.lit(0.0)).alias(f"y_{short}"))
+        return F.struct(*cols)
+
+    aligned = F.map_zip_with(F.coalesce("x", empty), F.coalesce("y", empty), zero_filled)
+    return joined.select(
+        "word1", "word2", "is_related", F.explode(aligned).alias("feature", "v")
+    ).select("word1", "word2", "is_related", "feature", "v.*")
 
 
 def pair_vectors(

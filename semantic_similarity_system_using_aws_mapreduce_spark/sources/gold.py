@@ -24,7 +24,9 @@ def read_gold_standard(spark: SparkSession, path: str, stem: bool = True) -> Dat
     """Read gold pairs into R5 ``(word1, word2, related)``; words are
     Porter-stemmed like the reference does at load time
     (Step4.java:109-110)."""
-    parts = F.split(F.trim(F.col("value")), r"\s+")
+    # strip every leading/trailing whitespace character, not just spaces
+    # (F.trim): a tab-led or tab-ended line still splits into 3 tokens
+    parts = F.split(F.regexp_replace(F.col("value"), r"^\s+|\s+$", ""), r"\s+")
     df = (
         spark.read.text(path)
         .select(parts.alias("p"))

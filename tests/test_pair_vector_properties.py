@@ -15,7 +15,7 @@ import os
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from semantic_similarity_system_using_aws_mapreduce_spark.plans.pipeline import semantic_similarity_pipeline
@@ -25,6 +25,9 @@ from reference_oracle import assoc_measures, load_gold, pair_vectors, step1_coun
 
 WORDS = ["aa", "bb", "cc", "dd", "ee", "ff"]
 DEPS = ["d1", "d2"]
+# gold-only spellings: "aas" stems to "aa" (w1 == w2 after stemming);
+# "gg" and "hh" occur in no corpus (one side or both sides absent)
+GOLD_WORDS = WORDS + ["aas", "gg", "hh"]
 
 
 @st.composite
@@ -45,13 +48,45 @@ def corpus_lines(draw):
 
 @st.composite
 def gold_lines(draw):
+    """Gold pairs over corpus and absent words, each line optionally
+    followed by the same pair reversed, the same pair with the other
+    label, or a duplicate of itself."""
     n = draw(st.integers(1, 8))
     out = []
     for _ in range(n):
-        w1 = draw(st.sampled_from(WORDS))
-        w2 = draw(st.sampled_from([w for w in WORDS if w != w1]))
-        out.append(f"{w1}\t{w2}\t{draw(st.booleans())}")
+        w1 = draw(st.sampled_from(GOLD_WORDS))
+        w2 = draw(st.sampled_from(GOLD_WORDS))
+        label = draw(st.booleans())
+        out.append(f"{w1}\t{w2}\t{label}")
+        twin = draw(st.sampled_from(["none", "reversed", "relabelled", "duplicate"]))
+        if twin == "reversed":
+            out.append(f"{w2}\t{w1}\t{label}")
+        elif twin == "relabelled":
+            out.append(f"{w1}\t{w2}\t{not label}")
+        elif twin == "duplicate":
+            out.append(out[-1])
     return out
+
+
+# every alignment edge case at once: a pair equal after stemming, a word
+# absent on one side and on both sides, both orientations, both labels
+# and a duplicate line
+EDGE_CORPUS = [
+    "h\taa/NN/d1/0 bb/NN/d2/1\t3\t2000,3",
+    "h\tcc/NN/d1/0 aa/NN/d2/1 dd/NN/d1/2\t2\t2000,2",
+    "h\tbb/NN/d2/0 dd/NN/d1/1\t1\t2000,1",
+]
+EDGE_GOLD = [
+    "aa\taas\tTrue",
+    "aa\tgg\tFalse",
+    "gg\tcc\tTrue",
+    "gg\thh\tTrue",
+    "aa\tbb\tTrue",
+    "bb\taa\tTrue",
+    "cc\tdd\tTrue",
+    "cc\tdd\tFalse",
+    "cc\tdd\tTrue",
+]
 
 
 @settings(
@@ -59,23 +94,25 @@ def gold_lines(draw):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(corpus_lines(), gold_lines())
-def test_pipeline_agrees_with_reference_oracle(spark, tmp_path_factory, corpus, gold):
+@given(corpus_lines(), gold_lines(), st.sampled_from(["parity", "standard"]))
+@example(EDGE_CORPUS, EDGE_GOLD, "parity")
+@example(EDGE_CORPUS, EDGE_GOLD, "standard")
+def test_pipeline_agrees_with_reference_oracle(spark, tmp_path_factory, corpus, gold, mode):
     d = tmp_path_factory.mktemp("pv")
     cpath, gpath = d / "corpus.txt", d / "gold.txt"
     cpath.write_text("\n".join(corpus) + "\n")
     gpath.write_text("\n".join(gold) + "\n")
 
     counts, total = step1_counts(corpus)
-    assoc = assoc_measures(counts, total, mode="parity")
+    assoc = assoc_measures(counts, total, mode=mode)
     # js_reset_quirk=False: the engine deliberately treats an exact
     # (0,0) aligned pair as contributing 0 instead of resetting the JS
     # accumulator (documented gap, operators/similarity.py); the quirk
     # branch is compared separately below.
-    expected = pair_vectors(assoc, load_gold(gpath), mode="parity", js_reset_quirk=False)
-    quirk = pair_vectors(assoc, load_gold(gpath), mode="parity", js_reset_quirk=True)
+    expected = pair_vectors(assoc, load_gold(gpath), mode=mode, js_reset_quirk=False)
+    quirk = pair_vectors(assoc, load_gold(gpath), mode=mode, js_reset_quirk=True)
 
-    result = semantic_similarity_pipeline(spark, str(cpath), str(gpath), mode="parity")
+    result = semantic_similarity_pipeline(spark, str(cpath), str(gpath), mode=mode)
     got = {
         (r.word1, r.word2, r.is_related): [r[c] for c in VECTOR_COLUMNS]
         for r in result.vectors.collect()

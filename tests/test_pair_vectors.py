@@ -80,3 +80,27 @@ def test_zero_fill_alignment(spark):
     assert math.isclose(row.freq_sim_jaccard, 2.0 / 13.0)
     # dice: 2*2 / (1 + 7 + 7)
     assert math.isclose(row.freq_sim_dice, 4.0 / 15.0)
+
+
+def test_gold_reader_strips_tabs_like_the_oracle(spark, tmp_path):
+    """Leading and trailing tabs are whitespace like any other: the
+    engine keeps exactly the lines the oracle's ``str.split()`` keeps."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.sources.gold import read_gold_standard
+
+    path = tmp_path / "gold.txt"
+    path.write_text(
+        "run\truns\tTrue\t\n"
+        "\tcat cats False\n"
+        " \t dog  dogs\tTRUE \t\n"
+        "one two\n"
+        "\tone two three four\n"
+    )
+    expected = {
+        (lexeme, other, rel.lower() == "true")
+        for lexeme, entries in load_gold(path).items()
+        for other, is_w1, rel in entries
+        if is_w1
+    }
+    got = {(r.word1, r.word2, r.related) for r in read_gold_standard(spark, str(path)).collect()}
+    assert got == expected
+    assert len(got) == 3

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -279,3 +280,73 @@ def test_funnel_exact_dedup_is_partial_aggregate_not_window_sort(spark):
         plan = plan_of(joined)
         assert "partial_min" in plan or "partial_max" in plan, plan
         assert "Window" not in plan, plan
+
+
+def plan_tree(plan: str):
+    """EXPLAIN FORMATTED -> (name, parent, detail) per operator id."""
+    body = plan.split("== Physical Plan ==\n", 1)[1]
+    tree, _, details = body.partition("\n\n\n")
+    name, parent, stack = {}, {}, []
+    for line in tree.splitlines():
+        m = re.match(r"^([ :+\-]*)(.+) \((\d+)\)$", line)
+        depth, node = len(m.group(1)), int(m.group(3))
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        name[node] = m.group(2).split()[0]
+        parent[node] = stack[-1][1] if stack else None
+        stack.append((depth, node))
+    detail = {}
+    for block in details.strip().split("\n\n"):
+        m = re.match(r"\((\d+)\) ", block)
+        if m:
+            detail[int(m.group(1))] = block
+    return name, parent, detail
+
+
+def test_step4_ships_lexeme_vectors_not_pair_feature_rows(spark):
+    """Step4 exchange budget.  Each gold word's association rows meet
+    in ONE partial-aggregated shuffle (collect_list into a feature map);
+    the maps reach the gold pairs by broadcast, and the per-(pair,
+    feature) rows that the zero-fill explodes are summed per pair
+    before any shuffle.  So every shuffle above the assoc scan sits
+    directly on a partial aggregate.  The frames are in-memory, so
+    their sizes are known and the maps are broadcast, as they are when
+    Step4 reads a small assoc checkpoint back."""
+    from semantic_similarity_system_using_aws_mapreduce_spark.operators.pair_vectors import pair_vectors
+
+    assoc = spark.sql(
+        """SELECT * FROM VALUES
+             ('aa', 'f1', 1D, 0.1D, 1D, 0.1D), ('aa', 'f2', 2D, 0.2D, 2D, 0.2D),
+             ('bb', 'f2', 5D, 0.5D, 5D, 0.5D), ('cc', 'f3', 7D, 0.7D, 7D, 0.7D)
+           AS assoc(lexeme, feature, assoc_freq, assoc_prob, assoc_pmi, assoc_ttest)"""
+    )
+    gold = spark.sql(
+        """SELECT * FROM VALUES ('aa', 'bb', true), ('bb', 'aa', false), ('aa', 'zz', true)
+           AS gold(word1, word2, related)"""
+    )
+    name, parent, detail = plan_tree(plan_of(pair_vectors(assoc, gold)))
+
+    def ancestors(node):
+        while parent[node] is not None:
+            node = parent[node]
+            yield node
+
+    def is_partial_aggregate(node):
+        return name[node].endswith("Aggregate") and "partial_" in detail[node]
+
+    scans = [n for n in name if "Scan" in name[n] and "assoc_freq" in detail[n]]
+    shuffles = {n for n in name if name[n] == "Exchange"}
+    plan = "\n".join(detail.values())
+    # every shuffle above the assoc scan sits on a partial aggregate
+    above_assoc = shuffles & {a for s in scans for a in ancestors(s)}
+    assert above_assoc, plan
+    for node in above_assoc:
+        (child,) = [n for n in name if parent[n] == node]
+        assert is_partial_aggregate(child), (name[child], node, plan)
+    # the aligned rows reach no shuffle: a per-pair partial sum comes first
+    (align,) = [n for n in name if name[n] == "Generate" and "map_zip_with" in detail[n]]
+    path = []
+    for node in ancestors(align):
+        if node in shuffles:
+            assert any(is_partial_aggregate(n) for n in path), plan
+        path.append(node)
